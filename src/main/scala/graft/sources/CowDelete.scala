@@ -170,14 +170,8 @@ object CowMerge {
         .join(table.select(keyCols.map(col): _*), keyCols, "left_anti")
         .select(table.columns.toSeq.map(col): _*)
       if (newRows.isEmpty) 0L
-      else {
-        val base = Paths.get(path).toAbsolutePath
-        val sample = table.select(col("_metadata.file_path"))
-          .limit(1).collect().headOption.map(r => CowCore.localPath(r.getString(0)))
-        val partitionCols =
-          sample.map(CowCore.partitionColsOf(spark, table, _)).getOrElse(Nil)
-        CowCore.stageAndMove(spark, base, partitionCols, newRows)
-      }
+      else CowCore.stageAndMove(spark, Paths.get(path).toAbsolutePath,
+        CowCore.partitionColsOf(spark, table), newRows)
     } finally src.unpersist()
   }
 
@@ -218,13 +212,7 @@ object CowMerge {
         .join(table.select(keyCs: _*), keyCols, "left_anti")
         .select(table.columns.toSeq.map(col): _*)
       if (newRows.isEmpty) None
-      else {
-        val sample = table.select(col("_metadata.file_path"))
-          .limit(1).collect().headOption.map(r => CowCore.localPath(r.getString(0)))
-        val partitionCols =
-          sample.map(CowCore.partitionColsOf(spark, table, _)).getOrElse(Nil)
-        Some(CowCore.stage(spark, base, partitionCols, newRows))
-      }
+      else Some(CowCore.stage(spark, base, CowCore.partitionColsOf(spark, table), newRows))
     } else None
 
     val s = CowCore.rewrite(spark, path,
@@ -317,8 +305,7 @@ private[sources] object CowCore {
       countMatching: Option[Column] = None): Stats = {
     if (liveFiles.isEmpty) requireUnmanaged(path, "row-level DML")
     val table = liveFiles match {
-      case Some(fs) if fs.nonEmpty =>
-        spark.read.option("basePath", path).parquet(fs: _*)
+      case Some(fs) if fs.nonEmpty => MorDelete.readFiles(spark, path, fs)
       case Some(_) => return Stats(Nil, 0L, 0L)
       case None => spark.read.option("basePath", path).parquet(path)
     }
@@ -351,7 +338,7 @@ private[sources] object CowCore {
     // count observes the SAME pass — the metrics node sits between the
     // scan and the transform, so no second scan ever runs.
     val base = Paths.get(path).toAbsolutePath
-    val partitionCols = partitionColsOf(spark, table, touched.head)
+    val partitionCols = partitionColsOf(spark, table)
     // a metrics expression cannot hold an IN/EXISTS subquery — such a
     // predicate silently skips the observation (callers fall back to the
     // footer row counts or a separate count for their row-count result)
@@ -360,7 +347,8 @@ private[sources] object CowCore {
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]))
     val obs = observable.map(_ =>
       org.apache.spark.sql.Observation(s"cow_dml_${UUID.randomUUID().toString.take(8)}"))
-    val source = spark.read.option("basePath", path).parquet(touched: _*)
+    // the touched files read at the table's (known) schema: no inference
+    val source = spark.read.option("basePath", path).schema(table.schema).parquet(touched: _*)
     val observed = observable match {
       case Some(p) => source.observe(obs.get,
         sum(when(p, lit(1L)).otherwise(lit(0L))).as("matched"))
@@ -376,12 +364,16 @@ private[sources] object CowCore {
     Stats(touched, total, newFiles.size.toLong, newFiles, matched, tRows, nRows)
   }
 
-  /** Partition-directory columns = table columns absent from the data files. */
-  def partitionColsOf(spark: SparkSession,
-      table: org.apache.spark.sql.DataFrame, sampleFile: String): Seq[String] =
-    table.schema.fieldNames.filter { f =>
-      !spark.read.parquet(sampleFile).schema.fieldNames.contains(f)
-    }.toSeq
+  /** Partition-directory columns = table columns absent from the data
+    * files, judged on the footer of the read's first file, read on the
+    * driver — no Spark job. */
+  def partitionColsOf(spark: SparkSession, table: org.apache.spark.sql.DataFrame): Seq[String] =
+    table.inputFiles.headOption.map(localPath) match {
+      case None => Nil
+      case Some(f) =>
+        val dataCols = MorDelete.footerSchema(spark, f).fieldNames.toSet
+        table.schema.fieldNames.filterNot(dataCols).toSeq
+    }
 
   /** Write `df` as parquet into a fresh stage directory next to `base`.
     * The write EXECUTES here — any lineage over the live table reads the
@@ -427,7 +419,7 @@ private[sources] object CowCore {
   private def walk(f: File): Seq[File] =
     if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
 
-  private def deleteRecursively(f: File): Unit = {
+  private[sources] def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
     f.delete(); ()
   }

@@ -77,12 +77,15 @@ object Evolution {
   /** The table's current logical column names: the declared schema when
     * the table has evolved, the (uniform) physical schema — INCLUDING any
     * partition-directory columns, which live in paths, not file footers —
-    * otherwise. */
+    * otherwise. A live table needs no Spark job for it: the first live
+    * file's footer columns, then its `col=value` path segments, in the
+    * order a basePath read reports them. */
   private[graft] def tableColumns(spark: SparkSession, path: String, st: State): Seq[String] =
     if (st.schema.nonEmpty) st.schema.map(_._1)
-    else if (st.dataFiles.nonEmpty)
-      spark.read.option("basePath", path).parquet(st.dataFiles: _*)
-        .schema.fieldNames.toSeq
+    else if (st.dataFiles.nonEmpty) {
+      val data = MorDelete.footerSchema(spark, st.dataFiles.head).fieldNames.toSeq
+      data ++ MorDelete.partitionColsFromPaths(path, st).filterNot(data.contains)
+    }
     else spark.read.option("basePath", path).parquet(path).schema.fieldNames.toSeq
 
   /** Physical names of the logical columns inside a file of sequence
@@ -174,14 +177,11 @@ object Evolution {
       require(st.dataFiles.nonEmpty,
         s"cannot derive a schema to evolve: no live data files at $path")
       val partCols = MorDelete.partitionColsFromPaths(path, st)
-      val dataFields = spark.read.parquet(st.dataFiles.head).schema.fields.toSeq
+      val dataFields = MorDelete.footerSchema(spark, st.dataFiles.head).fields.toSeq
       val partFields =
         if (partCols.isEmpty) Nil
-        else {
-          val raw = spark.read.option("basePath", path).parquet(st.dataFiles: _*)
-          raw.schema.fields.toSeq
-            .filter(f => partCols.exists(_.equalsIgnoreCase(f.name)))
-        }
+        else MorDelete.readFiles(spark, path, st.dataFiles).schema.fields.toSeq
+          .filter(f => partCols.exists(_.equalsIgnoreCase(f.name)))
       (dataFields ++ partFields).map(f => f.name -> f.dataType.sql)
     }
 
@@ -427,8 +427,10 @@ object Evolution {
     val st = MorDelete.liveState(spark, path)
     if (st.schema.nonEmpty) st.schema
     else {
-      val head = if (st.dataFiles.nonEmpty) st.dataFiles.head else path
-      spark.read.parquet(head).schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
+      val fields =
+        if (st.dataFiles.nonEmpty) MorDelete.footerSchema(spark, st.dataFiles.head).fields
+        else spark.read.parquet(path).schema.fields
+      fields.toSeq.map(f => f.name -> f.dataType.sql)
     }
   }
 }

@@ -135,7 +135,7 @@ object MorDelete {
     * @param sidecarFiles live sidecar parquet part files after the append
     * @param rowsMatched  rows of the resolved view the predicate matched
     *                     (measured by an Observation on the same pass that
-    *                     extracted the keys — never a second scan)
+    *                     writes the keys — never a second scan)
     */
   final case class MorStats(keysWritten: Long, sidecarFiles: Long, rowsMatched: Long = -1L)
 
@@ -169,40 +169,62 @@ object MorDelete {
       .sortBy(_._1)
   }
 
-  /** Driver-side parquet SCHEMA memo. Construction-time schema inference
-    * (a footer read per distinct file set) measured 70–90 ms per MoR read
-    * construction at bench scale (ProbeMorParts, r18) and repeats
-    * identically for every read of an unchanged snapshot. Keyed on the
-    * exact path set plus each entry's (length, mtime), so any rewrite,
-    * append, compaction or vacuum changes the key and re-infers. This
+  /** Driver-side parquet SCHEMA memo, one entry per FILE: the schema of
+    * its footer, read on the driver. Schema inference
+    * (`spark.read.parquet(f).schema`) runs that footer read as a
+    * one-task Spark job, 70–90 ms per MoR read construction at bench
+    * scale, and a commit that inferred every schema it needed paid one
+    * such job per table column. Keyed on the path plus its (length,
+    * mtime); data files and tombstone batches are immutable, so an entry
+    * stays valid across appends, and a rewrite names a new file. This
     * caches METADATA (a StructType), never data or results — the same
     * class of cache as Spark's own file-index/partition caches; every
     * query still computes from the parquet inputs. */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
-  private def memoSchema(paths: Seq[String], basePath: Option[String])(
-      infer: => org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
-    val key = basePath.getOrElse("") + "\n" + paths.sorted.map { p =>
-      val f = new java.io.File(p)
-      s"$p|${f.length}|${f.lastModified}"
-    }.mkString("\n")
+
+  /** The data schema of one parquet file (never its partition-directory
+    * columns) — what `spark.read.parquet(file).schema` infers, from the
+    * memo or the footer, never through a Spark job. */
+  private[sources] def footerSchema(spark: SparkSession,
+      file: String): org.apache.spark.sql.types.StructType = {
+    val f = new java.io.File(file)
     if (schemaMemo.size > 512) schemaMemo.clear()
-    schemaMemo.computeIfAbsent(key, _ => infer)
+    schemaMemo.computeIfAbsent(s"$file|${f.length}|${f.lastModified}", _ =>
+      org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+        .footerSchema(spark, file))
   }
 
+  /** `files` (one physical schema, as every uniform table's live set)
+    * read below `path` with the first one's footer schema declared: no
+    * inference job, and partition-directory columns still come from
+    * Spark's own discovery with the types an inferring read gives them,
+    * since the declared schema names none of them. */
+  private[sources] def readFiles(spark: SparkSession, path: String,
+      files: Seq[String]): DataFrame =
+    spark.read.option("basePath", path).schema(footerSchema(spark, files.head))
+      .parquet(files: _*)
+
+  /** Every live batch shares one schema (the key columns plus
+    * [[SeqCol]]; [[appendTombstones]] refuses a different key set), so
+    * one footer of the oldest batch declares it — an entry that stays
+    * valid while later batches append. */
   private def sidecarOf(spark: SparkSession, bs: Seq[(Long, java.io.File)]): DataFrame = {
     val paths = bs.map(_._2.toString)
-    // explicit (memoized) schema skips the per-construction footer read
-    spark.read.schema(memoSchema(paths, None)(
-      spark.read.parquet(paths: _*).schema)).parquet(paths: _*)
+    val head = bs.iterator.flatMap(b => Option(b._2.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted)
+      .nextOption().getOrElse(throw new IllegalStateException(
+        s"no tombstone batch of ${paths.mkString(", ")} holds a parquet file"))
+    spark.read.schema(footerSchema(spark, head)).parquet(paths: _*)
   }
 
-  /** The LIVE sidecar key set (None when no live batch exists). */
-  private[graft] def sidecarKeyCols(spark: SparkSession, path: String): Option[Seq[String]] = {
-    val bs = liveState(spark, path).batches
+  private def keyColsOf(spark: SparkSession, bs: Seq[(Long, java.io.File)]): Option[Seq[String]] =
     if (bs.isEmpty) None
     else Some(sidecarOf(spark, bs).columns.toSeq.filterNot(_ == SeqCol))
-  }
+
+  /** The LIVE sidecar key set (None when no live batch exists). */
+  private[graft] def sidecarKeyCols(spark: SparkSession, path: String): Option[Seq[String]] =
+    keyColsOf(spark, liveState(spark, path).batches)
 
   // ---------------------------------------------------------------------
   // Snapshot manifests
@@ -618,13 +640,19 @@ object MorDelete {
     try body finally { Files.deleteIfExists(lock); () }
   }
 
-  /** Stage-and-rename one tombstone batch directory: distinct keys +
-    * sequence staged under a dot-directory, then ONE atomic directory
-    * rename to `batch-<seq>-<uuid>`. On a managed table the batch stays
-    * INVISIBLE until the caller publishes a manifest naming it — the
-    * rename only makes it durable. An empty key set commits nothing (no
-    * empty batch to trip later sequence scans, no key-set lock-in from a
-    * no-op DELETE). Returns (keys written, committed directory name).
+  /** Stage-and-rename one tombstone batch directory: the keys (one row
+    * per key — callers dedupe) + sequence written ONCE under a
+    * dot-directory, counted off the staged
+    * footers (no Spark job), then ONE atomic directory rename to
+    * `batch-<seq>-<uuid>`. No pin is needed although `keys` usually reads
+    * this table (delete predicates run on the resolved view): the single
+    * write is the only evaluation, and it runs while the stage is
+    * invisible — outside every batch directory and every manifest. On a
+    * managed table the batch stays INVISIBLE until the caller publishes
+    * a manifest naming it — the rename only makes it durable. An empty
+    * key set commits nothing (its stage is discarded: no empty batch to
+    * trip later sequence scans, no key-set lock-in from a no-op DELETE).
+    * Returns (keys written, committed directory name).
     */
   private[graft] def appendTombstones(spark: SparkSession, path: String,
       keys: DataFrame, keyCols: Seq[String], seq: Long,
@@ -636,23 +664,22 @@ object MorDelete {
         s"tombstone sidecar already keyed by (${existing.mkString(", ")}); " +
           s"got (${keyCols.mkString(", ")}) — compact() before changing the key set")
     }
-    // pin the rows before writing: a lazy source whose lineage reads this
-    // table (the usual case — delete predicates run on the resolved view)
-    // must not re-evaluate after the sidecar gains the new batch
-    val rows = keys.select(keyCols.map(col): _*).distinct()
-      .withColumn(SeqCol, lit(seq))
-      .localCheckpoint(true)
-    try {
-      val n = rows.count()
-      if (n == 0L) return (0L, None)
-      val side = Paths.get(sidecarDir(path))
-      Files.createDirectories(side)
-      val stage = side.resolve(s".stage-${UUID.randomUUID().toString.take(8)}")
-      rows.write.mode("overwrite").parquet(stage.toString)
-      val name = s"batch-$seq-${UUID.randomUUID().toString.take(8)}"
-      Files.move(stage, side.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      (n, Some(name))
-    } finally { rows.unpersist(); () }
+    val side = Paths.get(sidecarDir(path))
+    val firstBatch = !Files.isDirectory(side)
+    Files.createDirectories(side)
+    val stage = side.resolve(s".stage-${UUID.randomUUID().toString.take(8)}")
+    keys.select(keyCols.map(col): _*).withColumn(SeqCol, lit(seq))
+      .write.mode("overwrite").parquet(stage.toString)
+    val n = CowCore.footerRows(Option(stage.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq)
+    if (n == 0L) {
+      CowCore.deleteRecursively(stage.toFile)
+      if (firstBatch) side.toFile.delete()
+      return (0L, None)
+    }
+    val name = s"batch-$seq-${UUID.randomUUID().toString.take(8)}"
+    Files.move(stage, side.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    (n, Some(name))
   }
 
   /** Tombstone all rows matching `predicate` in the CURRENT resolved view
@@ -667,15 +694,13 @@ object MorDelete {
     // earlier tombstones/upserts must not donate their keys (a predicate
     // matching only a key's DEAD values would otherwise delete its live
     // replacement row). The matched-row count rides an Observation on the
-    // SAME pass that extracts the keys — never a second scan.
+    // SAME pass that writes the keys — never a second scan.
     val obs = org.apache.spark.sql.Observation(s"mor_del_${UUID.randomUUID().toString.take(8)}")
     val keys = resolvedOf(spark, path, st, Long.MaxValue).filter(predicate)
       .observe(obs, count(lit(1)).as("matched"))
     val seq = maxSeq(spark, path) + 1
-    val existing =
-      if (st.batches.isEmpty) None
-      else Some(sidecarOf(spark, st.batches).columns.toSeq.filterNot(_ == SeqCol))
-    val (n, batchName) = appendTombstones(spark, path, keys, keyCols, seq, existing)
+    val (n, batchName) = appendTombstones(spark, path,
+      keys.select(keyCols.map(col): _*).distinct(), keyCols, seq, keyColsOf(spark, st.batches))
     // an all-empty observed input yields an EMPTY metrics map (no task
     // produced a metrics row) — that IS zero matches, not a failure
     val matched =
@@ -699,10 +724,8 @@ object MorDelete {
     ensureManaged(spark, path)
     val st = liveState(spark, path)
     val seq = maxSeq(spark, path) + 1
-    val existing =
-      if (st.batches.isEmpty) None
-      else Some(sidecarOf(spark, st.batches).columns.toSeq.filterNot(_ == SeqCol))
-    val (n, batchName) = appendTombstones(spark, path, keys, keyCols, seq, existing)
+    val (n, batchName) = appendTombstones(spark, path,
+      keys.select(keyCols.map(col): _*).distinct(), keyCols, seq, keyColsOf(spark, st.batches))
     if (n == 0L) return 0L
     val newBatch = seq -> new java.io.File(sidecarDir(path), batchName.get)
     writeManifest(path, nextOrdinal(path), seq,
@@ -1033,16 +1056,13 @@ object MorDelete {
         //    probe+filter per row is the same either way, only the
         //    branch where unmatched rows exit differs.
         def scan(fs: Seq[String]) = {
-          val s = memoSchema(fs, Some(path))(
-            spark.read.option("basePath", path).parquet(fs: _*).schema)
           // when no scanned file postdates any DML (max nameSeq == 0) the
           // per-row parse is the constant 0 — same planning-time fact the
           // resolved read's equi fast path rides; the scan then never
           // materializes _metadata.file_path and the in-range pre-filter
           // `__mor_fseq > lo` constant-folds
           val seqCol = if (filesMaxSeq(fs) == 0L) lit(0L) else fileSeq
-          spark.read.option("basePath", path).schema(s).parquet(fs: _*)
-            .withColumn("__mor_fseq", seqCol)
+          readFiles(spark, path, fs).withColumn("__mor_fseq", seqCol)
         }
         val anyInRange = atTo.dataFiles.exists(f =>
           nameSeq(Paths.get(f).getFileName.toString) > lo)
@@ -1584,11 +1604,7 @@ object MorDelete {
         // union computes __mor_fseq per epoch; applyTombstones reuses it)
         Evolution.evolvedRead(spark, path, st)
       else if (st.dataFiles.nonEmpty)
-        statsIndexedRead(spark, path, st).getOrElse {
-          val s = memoSchema(st.dataFiles, Some(path))(
-            spark.read.option("basePath", path).parquet(st.dataFiles: _*).schema)
-          spark.read.option("basePath", path).schema(s).parquet(st.dataFiles: _*)
-        }
+        statsIndexedRead(spark, path, st).getOrElse(readFiles(spark, path, st.dataFiles))
       else if (st.schema.nonEmpty)
         // fully-emptied but schema-declared table: the manifest itself
         // carries the schema for the empty view. The file-sequence column
@@ -1763,8 +1779,7 @@ object MorDelete {
             dirValues.getOrElse(Paths.get(f).getParent.toString, Nil): Seq[Any],
             st.stats.getOrElse(f, Nil))
         }
-        val schema = memoSchema(Seq(st.dataFiles.head), None)(
-          cs.read.parquet(st.dataFiles.head).schema)
+        val schema = footerSchema(spark, st.dataFiles.head)
         val index = new MorStatsFileIndex(
           new org.apache.hadoop.fs.Path("file:" + base), partSchema, files)
         Some(cs.baseRelationToDataFrame(HadoopFsRelation(index,
@@ -1902,22 +1917,20 @@ object MorDelete {
     if (st.batches.size <= 1) return st.batches.size.toLong
     val side = sidecarOf(spark, st.batches)
     val keyCols = side.columns.toSeq.filterNot(_ == SeqCol)
-    // pin before writing: the reduction's lineage reads the batches the
-    // new manifest is about to supersede
-    val reduced = side.groupBy(keyCols.map(col): _*)
+    // one write, no pin: the reduction reads the batches the new manifest
+    // supersedes, and it runs before that manifest exists (replaced
+    // batches are retained until vacuum in any case)
+    val sideDir = Paths.get(sidecarDir(path))
+    val stage = sideDir.resolve(s".stage-${UUID.randomUUID().toString.take(8)}")
+    side.groupBy(keyCols.map(col): _*)
       .agg(max(col(SeqCol)).as(SeqCol))
-      .localCheckpoint(true)
-    try {
-      val sideDir = Paths.get(sidecarDir(path))
-      val stage = sideDir.resolve(s".stage-${UUID.randomUUID().toString.take(8)}")
-      reduced.write.mode("overwrite").parquet(stage.toString)
-      val top = st.batches.map(_._1).max
-      val name = s"batch-$top-${UUID.randomUUID().toString.take(8)}"
-      Files.move(stage, sideDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      publishManifest(path, maxSeq(spark, path),
-        st.copy(batches = Seq(top -> new java.io.File(sideDir.toFile, name))))
-      1L
-    } finally { reduced.unpersist(); () }
+      .write.mode("overwrite").parquet(stage.toString)
+    val top = st.batches.map(_._1).max
+    val name = s"batch-$top-${UUID.randomUUID().toString.take(8)}"
+    Files.move(stage, sideDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    publishManifest(path, maxSeq(spark, path),
+      st.copy(batches = Seq(top -> new java.io.File(sideDir.toFile, name))))
+    1L
   }
 
   def compact(spark: SparkSession, path: String,
@@ -1931,7 +1944,7 @@ object MorDelete {
         "(it folds the tombstones too), then compact() is legal again")
     if (st.batches.isEmpty)
       return CowDelete.DeleteStats(Nil, st.dataFiles.size.toLong, 0L)
-    val keyCols = sidecarOf(spark, st.batches).columns.toSeq.filterNot(_ == SeqCol)
+    val keyCols = keyColsOf(spark, st.batches).get
     // pin the keys first: the rewrite's lazy lineage must not re-read
     // the sidecar after the manifest drops it, and a checkpointed frame
     // fails loudly instead of silently recomputing from vacuumed files
@@ -1961,7 +1974,7 @@ object MorDelete {
           // per-file doomed fraction: two counts projected to the
           // file-path metadata column, joined driver-side over the
           // touched set (bounded by file count, like every CowCore list)
-          val table = spark.read.option("basePath", path).parquet(st.dataFiles: _*)
+          val table = readFiles(spark, path, st.dataFiles)
           val withFp = table.withColumn("__cow_fp", col("_metadata.file_path"))
           val doomedPer = doomed(withFp).groupBy(col("__cow_fp"))
             .agg(count(lit(1)).as("doomed")).collect()
@@ -2136,7 +2149,7 @@ object Maintenance {
       files: Seq[String], statCols: Seq[String]): Map[String, Seq[MorDelete.FileColStat]] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampNTZType, TimestampType}
-    val df = spark.read.option("basePath", path).parquet(files: _*)
+    val df = MorDelete.readFiles(spark, path, files)
     def dtypeOf(c: String): Option[DataType] =
       df.schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
     def domain(c: Column, dt: DataType): Column = dt match {
@@ -2281,7 +2294,7 @@ object Maintenance {
     // per-file stat; pre-statCols manifests fall back to any entry's set
     val publishedCols = (if (st.statCols.nonEmpty) Some(st.statCols.toSet) else None)
       .orElse(st.stats.values.headOption.map(_.map(_.col).toSet))
-    val df0 = spark.read.option("basePath", path).parquet(st.dataFiles: _*)
+    val df0 = MorDelete.readFiles(spark, path, st.dataFiles)
     import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampNTZType, TimestampType}
     def dtypeOf(c: String): Option[DataType] =
       df0.schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
@@ -2452,6 +2465,16 @@ object Maintenance {
   * manifest rename publishes both at once — a reader (or a crash)
   * between the stages sees the pre-merge state, never duplicates and
   * never lost rows; a crash leaves only unreferenced garbage for vacuum.
+  * A commit launches only the jobs that move or check rows:
+  *  - no schema inference — every schema comes from the manifest's
+  *    declared one or a memoized driver-side footer read, and partition
+  *    columns from the live files' paths;
+  *  - ONE classification pass — the source joined against the resolved
+  *    view, pinned once, carrying per key the matched flag and the
+  *    clause outcomes; deletes, replacements and inserts all derive from
+  *    it, and its counts and the source-uniqueness check ride the same
+  *    pass as one observed aggregate;
+  *  - counts of what was written come off the staged parquet footers.
   */
 object MorUpsert {
 
@@ -2560,17 +2583,22 @@ object MorUpsert {
         Seq(col("_commit_version").desc) else Nil) :+
         when(col("_change_type") === "insert", 0).otherwise(1).asc
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(order: _*)
+    // the two counts ride the pinning pass as one observed aggregate
+    val obs = org.apache.spark.sql.Observation(s"mor_apply_${UUID.randomUUID().toString.take(8)}")
+    val isInsert = col("_change_type") === "insert"
+    val isDelete = col("_change_type") === "delete"
     val finals = changes
       .withColumn("__cdc_rn", row_number().over(w))
       .filter(col("__cdc_rn") === 1).drop("__cdc_rn")
+      .observe(obs, count(when(isInsert, 1)).as("ups"), count(when(isDelete, 1)).as("dels"))
       .localCheckpoint(true)
     try {
-      val ups = finals.filter(col("_change_type") === "insert")
-        .select(tableCols.map(col): _*)
-      val dels = finals.filter(col("_change_type") === "delete")
-        .select(keyCols.map(col): _*)
+      val ups = finals.filter(isInsert).select(tableCols.map(col): _*)
+      val dels = finals.filter(isDelete).select(keyCols.map(col): _*)
       enforceConstraints(st, ups)
-      val (nUps, nDel) = (ups.count(), dels.count())
+      val counts = obs.get
+      def observed(k: String) = counts.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val (nUps, nDel) = (observed("ups"), observed("dels"))
       if (nUps == 0 && nDel == 0 && txn.isEmpty) return ApplyStats(0L, 0L)
       val seq = MorDelete.maxSeq(spark, path) + 1
       // stage the post-images as sequence-named parts (they survive their
@@ -2580,25 +2608,12 @@ object MorUpsert {
       val newParts =
         if (nUps == 0) Seq.empty[String]
         else {
+          // post-images land in the live files' col=value directories
           val base = Paths.get(path).toAbsolutePath
-          // an EVOLVED table's footer-vs-schema compare would false-
-          // positive on renamed columns, so mid-evolution the partition
-          // columns derive from paths — post-images keep landing in
-          // their col=value directories
-          val partitionCols =
-            if (st.dataFiles.isEmpty) Nil
-            else if (st.schemaLog.nonEmpty)
-              MorDelete.partitionColsFromPaths(path, st)
-            else {
-              val table = spark.read.option("basePath", path)
-                .parquet(st.dataFiles: _*)
-              table.select(col("_metadata.file_path")).limit(1).collect()
-                .headOption.map(r => CowCore.localPath(r.getString(0)))
-                .map(CowCore.partitionColsOf(spark, table, _)).getOrElse(Nil)
-            }
-          CowCore.moveIn(CowCore.stage(spark, base, partitionCols, ups),
-            base, prefix = s"part-mor$seq-")
+          CowCore.moveIn(CowCore.stage(spark, base,
+            MorDelete.partitionColsFromPaths(path, st), ups), base, prefix = s"part-mor$seq-")
         }
+      // one row per key: `finals` holds each key's final event only
       val allKeys = ups.select(keyCols.map(col): _*).unionByName(dels)
       val (nTomb, batchName) = MorDelete.appendTombstones(spark, path,
         allKeys, keyCols, seq, existing)
@@ -2633,26 +2648,23 @@ object MorUpsert {
       if (st.txns.get(app).exists(_ >= v))
         return MergeStats(0L, 0L, 0L, 0L, replaySkipped = true)
     }
-    // an evolved table's live files may physically disagree with the
-    // logical schema — every column-set decision runs on the LOGICAL one.
-    // Build at most ONE raw relation (none at all when the schema is
-    // declared in the manifest): relation construction lists files and
-    // reads footers, the cost that dominates a small merge's driver side
-    // at high file counts. The insert-only merge on a fully-emptied table
-    // falls back to the retained files for schema (same rule as the
-    // empty resolved view).
-    val rawTable: Option[DataFrame] =
-      if (st.schemaLog.nonEmpty) None
-      else if (st.dataFiles.nonEmpty)
-        Some(spark.read.option("basePath", path).parquet(st.dataFiles: _*))
-      else Some(spark.read.option("basePath", path).parquet(path).where(lit(false)))
-    val tableCols =
-      if (st.schema.nonEmpty) st.schema.map(_._1)
-      else rawTable.get.columns.toSeq
+    // every column-set decision runs on the LOGICAL schema (an evolved
+    // table's files may physically disagree with it), taken without a
+    // Spark job: declared in the manifest, or footer plus path segments
+    val tableCols = Evolution.tableColumns(spark, path, st)
     require(source.columns.toSet == tableCols.toSet,
       s"source columns (${source.columns.sorted.mkString(", ")}) must match " +
         s"the table's (${tableCols.sorted.mkString(", ")})")
     require(keyCols.nonEmpty, "merge needs at least one key column")
+    updateSet.foreach { sets =>
+      val bad = sets.map(_._1).filter(keyCols.contains)
+      require(bad.isEmpty,
+        s"UPDATE SET cannot assign key column(s) ${bad.mkString(", ")} — key " +
+          "identity is what links the replacement to the tombstone")
+      require(sets.forall(s => tableCols.contains(s._1)),
+        s"UPDATE SET targets unknown column(s): ${
+          sets.map(_._1).filterNot(tableCols.contains).mkString(", ")}")
+    }
     // every precondition fails BEFORE anything stages or moves (the
     // r14-advice ordering bug: a late key-set require after moveIn left
     // committed replacements with no tombstones — permanent duplicates)
@@ -2662,81 +2674,82 @@ object MorUpsert {
         s"tombstone sidecar already keyed by (${existing.mkString(", ")}); " +
           s"got (${keyCols.mkString(", ")}) — compact() before changing the key set")
     }
-    val src = source.select(tableCols.map(col): _*).localCheckpoint(true)
     val keyCs = keyCols.map(col)
-    var pinned: List[DataFrame] = Nil
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint(true); pinned ::= p; p
+    val nonKey = tableCols.filterNot(keyCols.contains)
+    // The classification pass: every source row LEFT OUTER JOIN its live
+    // target rows (matched = against the RESOLVED view, see scaladoc),
+    // source columns under src_, target columns only where a clause
+    // reads them. Window flags lift each clause outcome to its key
+    // (delete-first, as ANSI orders the clauses), mark one row per key,
+    // and catch a source key held by two source rows. Pinned ONCE: the
+    // source is evaluated exactly once, so a nondeterministic source
+    // yields one row set for the check, the tombstones and the appends.
+    val tgtCols = {
+      val reads = (deleteWhen.toSeq ++ updateWhen).map(referencedCols(spark, _))
+      if (updateSet.isDefined || reads.contains(None)) nonKey
+      else nonKey.filter(c => reads.exists(_.exists(_(c.toLowerCase))))
     }
+    val srcSide = source.select(keyCs ++ nonKey.map(c => col(c).as(s"src_$c")) :+
+      monotonically_increasing_id().as("__mg_sid"): _*)
+    val tgtSide = MorDelete.read(spark, path)
+      .select(keyCs ++ tgtCols.map(col) :+ lit(true).as("__mg_hit"): _*)
+    val byKey = org.apache.spark.sql.expressions.Window.partitionBy(keyCs: _*)
+    val matched = col("__mg_hit").isNotNull
+    def anyPair(c: Column): Column = max(when(matched && c, 1).otherwise(0)).over(byKey) === 1
+    val kDel = deleteWhen.map(anyPair).getOrElse(lit(false))
+    val kUpd = matched && !kDel && updateWhen.map(anyPair).getOrElse(lit(true))
+    val obs = org.apache.spark.sql.Observation(s"mor_merge_${UUID.randomUUID().toString.take(8)}")
+    val (mt, del, upd, first) = (col("__mg_m"), col("__mg_del"), col("__mg_upd"), col("__mg_first"))
+    val cls = srcSide.join(tgtSide, keyCols, "left_outer")
+      .select(keyCs ++ nonKey.map(c => col(s"src_$c")) ++ tgtCols.map(col) ++ Seq(
+        matched.as("__mg_m"), kDel.as("__mg_del"), kUpd.as("__mg_upd"),
+        (row_number().over(byKey.orderBy(col("__mg_sid"))) === 1).as("__mg_first"),
+        (min(col("__mg_sid")).over(byKey) =!= max(col("__mg_sid")).over(byKey))
+          .as("__mg_dup")): _*)
+      .observe(obs, count(when(col("__mg_dup"), 1)).as("dup"),
+        count(when(first && del, 1)).as("del"), count(when(first && upd, 1)).as("upd"),
+        count(when(!mt, 1)).as("ins"))
+      .localCheckpoint(true)
     try {
-      require(src.groupBy(keyCs: _*).count()
-        .where(col("count") > 1).isEmpty,
+      val counts = obs.get
+      def observed(k: String) = counts.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)
+      require(observed("dup") == 0L,
         "MERGE source must be unique on the key columns (ANSI cardinality rule)")
-      // matched = against the RESOLVED view (live rows only; see scaladoc),
-      // with source columns ridden in under src_ for the clause conditions
-      val resolved = MorDelete.read(spark, path)
-      val srcPref = src.select(keyCs ++ src.columns.toSeq.filterNot(keyCols.contains)
-        .map(c => col(c).as(s"src_$c")): _*)
-      val pairs = resolved.join(srcPref, keyCols)
-      val allMatched = pairs.select(keyCs: _*).distinct()
-      val delKeys = pin(deleteWhen
-        .map(c => pairs.filter(c).select(keyCs: _*).distinct())
-        .getOrElse(allMatched.limit(0)))
-      val updKeys = pin(updateWhen
-        .map(c => pairs.filter(c).select(keyCs: _*).distinct())
-        .getOrElse(allMatched)
-        .join(delKeys, keyCols, "left_anti"))
-      val inserts = pin(
-        if (insertUnmatched) src.join(resolved.select(keyCs: _*), keyCols, "left_anti")
-        else src.limit(0))
-      updateSet.foreach { sets =>
-        val bad = sets.map(_._1).filter(keyCols.contains)
-        require(bad.isEmpty,
-          s"UPDATE SET cannot assign key column(s) ${bad.mkString(", ")} — key " +
-            "identity is what links the replacement to the tombstone")
-        require(sets.forall(s => tableCols.contains(s._1)),
-          s"UPDATE SET targets unknown column(s): ${
-            sets.map(_._1).filterNot(tableCols.contains).mkString(", ")}")
-      }
-      val (nDel, nUpd, nIns) = (delKeys.count(), updKeys.count(), inserts.count())
+      val (nDel, nUpd) = (observed("del"), observed("upd"))
+      val nIns = if (insertUnmatched) observed("ins") else 0L
 
       val seq = MorDelete.maxSeq(spark, path) + 1
       // stage replacements + inserts as sequence-named part files and the
       // tombstone batch — all invisible until the manifest below names
-      // them (see the commit-discipline scaladoc). Replacements: the raw
-      // source row (upsert), or with `updateSet` the matched TARGET rows
-      // with the assignments projected over the (target, src_) pair
-      val replacements = updateSet match {
-        case None => src.join(updKeys, keyCols, "left_semi")
-        case Some(sets) =>
-          val byName = sets.toMap
-          pairs.join(updKeys, keyCols, "left_semi")
-            .select(tableCols.map(c =>
-              byName.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      }
-      val appended = replacements.unionByName(inserts)
+      // them (see the commit-discipline scaladoc). One projection of the
+      // pinned pass: a replacement is the source row (upsert, one per
+      // key), or with `updateSet` every matched TARGET row with the
+      // assignments applied over the (target, src_) pair; an insert is
+      // its source row
+      val fromSrc = (c: String) => if (keyCols.contains(c)) col(c) else col(s"src_$c")
+      val byName = updateSet.map(_.toMap)
+      val appended = cls
+        .where((upd && (if (byName.isDefined) lit(true) else first)) ||
+          (if (insertUnmatched) !mt else lit(false)))
+        .select(tableCols.map { c =>
+          byName match {
+            case None => fromSrc(c).as(c)
+            case Some(_) if keyCols.contains(c) => col(c)
+            case Some(sets) =>
+              when(mt, sets.getOrElse(c, col(c))).otherwise(fromSrc(c)).as(c)
+          }
+        }: _*)
       if (nUpd + nIns > 0) enforceConstraints(st, appended)
       val newParts =
         if (nUpd + nIns == 0) Seq.empty[String]
         else {
           val base = Paths.get(path).toAbsolutePath
-          // an evolved table (rawTable None — its epoch union has no
-          // _metadata column to sample) derives partition columns from
-          // paths, the rename-proof route; uniform tables keep the
-          // footer-vs-schema compare
-          val partitionCols = rawTable match {
-            case None => MorDelete.partitionColsFromPaths(path, st)
-            case Some(table) =>
-              val sample = table.select(col("_metadata.file_path"))
-                .limit(1).collect().headOption
-                .map(r => CowCore.localPath(r.getString(0)))
-              sample.map(CowCore.partitionColsOf(spark, table, _)).getOrElse(Nil)
-          }
-          val stage = CowCore.stage(spark, base, partitionCols, appended)
+          val stage = CowCore.stage(spark, base,
+            MorDelete.partitionColsFromPaths(path, st), appended)
           CowCore.moveIn(stage, base, prefix = s"part-mor$seq-")
         }
       val (nTomb, batchName) = MorDelete.appendTombstones(spark, path,
-        delKeys.unionByName(updKeys), keyCols, seq, existingKeys)
+        cls.where(first && (del || upd)), keyCols, seq, existingKeys)
       // a txn marker commits even when the batch changed no rows: the
       // version must advance so a later replay of the same batch id is
       // provably a no-op rather than re-evaluated
@@ -2749,10 +2762,16 @@ object MorUpsert {
             txns = st.txns ++ txn))
       }
       MergeStats(nDel, nUpd, nIns, newParts.size.toLong)
-    } finally {
-      src.unpersist()
-      pinned.foreach(_.unpersist())
-      ()
-    }
+    } finally { cls.unpersist(); () }
+  }
+
+  /** Lower-cased names a clause condition reads (None = cannot tell —
+    * a star or a subquery — so the caller carries every column). */
+  private def referencedCols(spark: SparkSession, c: Column): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAttribute}
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    val e = org.apache.spark.sql.GraftSqlBridge.toExpr(spark, c)
+    if (e.exists(x => x.isInstanceOf[Star] || x.isInstanceOf[SubqueryExpression])) None
+    else Some(e.collect { case a: UnresolvedAttribute => a.nameParts.head.toLowerCase }.toSet)
   }
 }

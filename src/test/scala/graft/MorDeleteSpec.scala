@@ -22,6 +22,8 @@ import graft.sources.{Maintenance, MorDelete, MorUpsert}
 class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  /** Jobs an upsert or a clause merge may launch on a small table. */
+  private val UpsertJobBudget = 10
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -54,6 +56,27 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       .repartition(4).write.mode("overwrite").parquet(loc)
     loc
   }
+
+  /** Spark jobs `body` launches: a listener over the drained bus. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+      (r, counter.jobs.get())
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   private def keys(loc: String): Set[Long] =
     MorDelete.read(spark, loc).select("o_orderkey")
@@ -562,8 +585,25 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       "replacements must win and carry the partition-directory column")
     assert(new File(loc, "o_orderpriority=9-UPSERTED").isDirectory,
       "the appended rows must land in their own partition directory")
+    // a clause merge on the analyzed (stats-indexed) partitioned table: its
+    // partition columns come from the live files' paths, not a sample job
+    Maintenance.analyze(spark, loc, Seq("o_orderkey"))
+    val live = MorDelete.read(spark, loc)
+    val m = MorUpsert.merge(spark, loc,
+      live.filter(col("o_orderkey").isin(4L, 5L, 6L, 7L)).select(live.columns.toSeq.map(col): _*),
+      Seq("o_orderkey"), deleteWhen = Some(col("o_orderkey") === 4L),
+      updateSet = Some(Seq("o_totalprice" -> (col("src_o_totalprice") + 1.0))))
+    assert(m.keysDeleted == 1 && m.keysUpdated == 3 && m.rowsInserted == 0)
     // compact + vacuum fold everything back while keeping the partition layout
     MorDelete.compact(spark, loc)
+    val base = java.nio.file.Paths.get(loc).toAbsolutePath
+    MorDelete.liveState(spark, loc).dataFiles.foreach { f =>
+      assert(base.relativize(java.nio.file.Paths.get(f)).getName(0).toString
+        .startsWith("o_orderpriority="), s"live file outside a partition directory: $f")
+    }
+    assert(sortedRows(MorDelete.read(spark, loc)) ==
+      sortedRows(MorDelete.readIgnoringStats(spark, loc)))
+    assert(MorDelete.read(spark, loc).filter(col("o_orderkey") === 4L).count() == 0)
     Maintenance.vacuum(loc, retentionMs = 0, stageGraceMs = 0)
     val physical = spark.read.option("basePath", loc).parquet(loc)
     assert(physical.filter(col("o_orderkey").isin(1L, 2L, 3L) &&
@@ -1747,5 +1787,54 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(MorDelete.nameSeq("part-morabc-x.parquet") == 0L)
     assert(MorDelete.nameSeq("part-mor99999999999999999999-x.parquet") == 0L)
     assert(MorDelete.nameSeq("xpart-mor5-x.parquet") == 0L)
+  }
+
+  test("constructing a read after a delete launches zero Spark jobs") {
+    val loc = freshTable()
+    MorDelete.delete(spark, loc, col("o_orderkey") % 10 === 3, Seq("o_orderkey"))
+    MorDelete.read(spark, loc) // the data files' footer schema is memoized
+    MorDelete.delete(spark, loc, col("o_orderkey") % 10 === 7, Seq("o_orderkey"))
+    // the sidecar's schema is the oldest live batch's footer, read on the
+    // driver: a new batch set must not cost an inference job
+    val (df, jobs) = jobsOf(MorDelete.read(spark, loc))
+    assert(jobs == 0, s"MorDelete.read construction launched $jobs job(s)")
+    assert(df.filter(col("o_orderkey") % 10 === 3 || col("o_orderkey") % 10 === 7)
+      .isEmpty)
+  }
+
+  test("commit jobs do not grow with the column count") {
+    // the same rows under 3 and under 20 columns: a commit that inferred
+    // a schema per column (one job each) would launch 17 more jobs on the
+    // wide table for every upsert, merge and compaction
+    def table(width: Int): String = {
+      val loc = Files.createTempDirectory("graft_mor_width").toString + "/t"
+      spark.range(0, 2000).select(col("id").as("k") +:
+          (1 until width).map(i => (col("id") * i % 97).as(s"c$i")): _*)
+        .repartition(4).write.parquet(loc)
+      loc
+    }
+    def ops(loc: String): Map[String, Int] = {
+      val del = jobsOf(MorDelete.delete(spark, loc, col("k") % 10 === 3, Seq("k")))._2
+      def batch(lo: Long, hi: Long) = {
+        val t = MorDelete.read(spark, loc)
+        t.filter(col("k").between(lo, hi)).withColumn("c1", col("c1") + 1)
+          .unionByName(t.filter(col("k").between(lo, hi)).withColumn("k", col("k") + 5000))
+      }
+      val (u, ups) = jobsOf(MorUpsert.upsert(spark, loc, batch(0, 99), Seq("k")))
+      assert(u.keysTombstoned == 90)
+      val (m, mrg) = jobsOf(MorUpsert.merge(spark, loc, batch(200, 299), Seq("k"),
+        deleteWhen = Some(col("c2") === 0), insertUnmatched = false,
+        updateSet = Some(Seq("c1" -> (col("src_c1") * 2)))))
+      assert(m.keysDeleted + m.keysUpdated == 90 && m.rowsInserted == 0)
+      val cmp = jobsOf(MorDelete.compact(spark, loc))._2
+      Map("delete" -> del, "upsert" -> ups, "merge" -> mrg, "compact" -> cmp)
+    }
+    val (narrow, wide) = (ops(table(3)), ops(table(20)))
+    info(s"jobs per commit: $wide")
+    assert(narrow == wide, s"jobs per commit, 3 columns $narrow vs 20 columns $wide")
+    // one classification pass, one append, one tombstone batch: the jobs
+    // that move or check rows, and none that infer a schema
+    assert(wide("upsert") <= UpsertJobBudget && wide("merge") <= UpsertJobBudget,
+      s"upsert/merge over the budget of $UpsertJobBudget jobs: $wide")
   }
 }
